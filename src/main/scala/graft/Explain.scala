@@ -9,8 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val wanted = args.drop(1).toSet
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, appName = "graft-explain")
+    val spark = GraftSession.local(appName = "graft-explain")
     SparkEntry.queries
       .filter { case (name, _) => wanted.isEmpty || wanted.contains(name) }
       .toSeq.sortBy(_._1)

@@ -5,14 +5,10 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registration for graft's native expressions, two ways:
-  *
-  *  - [[GraftFunctions.register]]: imperative, idempotent, on a live
-  *    session — used by the operator library and tests.
-  *  - [[GraftExtensions]]: the `spark.sql.extensions` injection point for
-  *    clusters configured with
-  *    `--conf spark.sql.extensions=graft.expressions.GraftExtensions`,
-  *    making `cosine_similarity(a, b)` available in pure SQL.
+/** graft's native SQL functions. [[GraftExtensions]] installs them, with
+  * graft's optimizer rule and planner strategy, into every session
+  * [[graft.GraftSession.local]] builds; [[GraftFunctions.register]] does
+  * the same for a session graft did not build.
   */
 object GraftFunctions {
 
@@ -300,9 +296,11 @@ object GraftFunctions {
         PoissonReplicates(children.head, children(1))
       }))
 
-  /** Idempotent runtime registration: the function registry AND the
-    * optimizer rules (`experimental.extraOptimizations` — the imperative
-    * twin of [[GraftExtensions]]'s `injectOptimizerRule`).
+  /** Idempotent install of everything [[GraftExtensions]] injects — the
+    * functions, [[graft.plans.LevenshteinThresholdRule]] and
+    * [[graft.plans.CosineTopKStrategy]] — on a live session that was not
+    * built with the extension (sessions from [[graft.GraftSession.local]]
+    * need no call).
     */
   def register(spark: SparkSession): Unit = {
     functions.foreach {
@@ -313,15 +311,25 @@ object GraftFunctions {
     if (!spark.experimental.extraOptimizations.contains(rule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ rule
+    val strategy = graft.plans.CosineTopKStrategy
+    if (!spark.experimental.extraStrategies.contains(strategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ strategy
   }
 }
 
-/** `spark.sql.extensions` entry point. */
+/** The one place graft's Catalyst extensions are declared: the SQL
+  * functions, the Levenshtein rule and the cosine top-k strategy.
+  * [[graft.GraftSession.local]] builds every session with it; a foreign
+  * session gets it through
+  * `--conf spark.sql.extensions=graft.expressions.GraftExtensions`.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach { case (ident, info, builder) =>
       ext.injectFunction((ident, info, builder))
     }
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinThresholdRule)
+    ext.injectPlannerStrategy(_ => graft.plans.CosineTopKStrategy)
   }
 }

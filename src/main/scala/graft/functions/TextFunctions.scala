@@ -64,8 +64,8 @@ object TextFunctions {
     * [[graft.expressions.TextArrayStats]] kernel. The per-stat columns
     * above each re-run `split` AND evaluate their lambda interpreted
     * per element; for corpus-wide profiling use this (split once, one
-    * array scan). Value-compatible with the declarative forms. Requires
-    * [[graft.expressions.GraftFunctions.register]] on the session.
+    * array scan). Value-compatible with the declarative forms. The
+    * kernel is a [[graft.expressions.GraftExtensions]] function.
     */
   def tokenStatsNative(text: Column, stopwords: Seq[String]): Column =
     tokenStatsNative(text, stopwords, Tokenize.Whitespace)
@@ -248,7 +248,6 @@ object TextFunctions {
   def repetitionStats(df: org.apache.spark.sql.DataFrame, idCol: String,
                       textCol: String, n: Int = 2): org.apache.spark.sql.DataFrame = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
         call_function("ngram_repetition", tokens(col(textCol)), lit(n)).as("__r"))
       .filter(col("__r.n_grams") > 0)
@@ -301,7 +300,6 @@ object TextFunctions {
   def tokenEntropyTable(df: org.apache.spark.sql.DataFrame, idCol: String,
                         textCol: String, n: Int = 1): org.apache.spark.sql.DataFrame = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
         call_function("ngram_repetition", tokens(col(textCol)), lit(n)).as("__r"))
       .filter(col("__r.n_grams") > 0)
@@ -346,7 +344,6 @@ object TextFunctions {
                         textCol: String, stopwords: Seq[String],
                         weights: QualityWeights = QualityWeights.default,
                         threshold: Double = 0.5): org.apache.spark.sql.DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val s = call_function("text_array_stats", tokens(col(textCol)), typedlit(stopwords))
     val nTok = col("__s.n_tokens").cast("double")
     val z = lit(weights.bias) +

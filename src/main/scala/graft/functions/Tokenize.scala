@@ -17,9 +17,8 @@ import org.apache.spark.sql.functions._
   *    "token" per clause).
   *  - [[Unicode]]: UAX#29 word boundaries + Thai dictionary + per-char
   *    Han/Hiragana via the native
-  *    [[graft.expressions.UnicodeTokens]] kernel. Needs
-  *    [[graft.expressions.GraftFunctions.register]] on the session
-  *    (all threaded operators register it themselves). Not
+  *    [[graft.expressions.UnicodeTokens]] kernel, a
+  *    [[graft.expressions.GraftExtensions]] function. Not
   *    SQL-replayable — pinned by the q209 degradation/round-trip
   *    oracle and hand-segmented spec fixtures instead.
   *

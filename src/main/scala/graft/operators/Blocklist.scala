@@ -30,12 +30,10 @@ object Blocklist {
   }
 
   /** Adds `hits` (per-pattern counts), `hits_total`, `patterns_hit`,
-    * and `blocked` (any hit) to `df`. Registers the native function
-    * idempotently.
+    * and `blocked` (any hit) to `df`.
     */
   def annotate(df: DataFrame, textCol: String,
                patterns: Seq[String]): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.withColumn("hits", hitCounts(col(textCol), patterns))
       .withColumn("hits_total",
         aggregate(col("hits"), lit(0L), (acc, c) => acc + c))

@@ -60,7 +60,6 @@ object Chunking {
   def sentenceChunks(df: DataFrame, idCol: String, textCol: String,
                      maxTokens: Int): DataFrame = {
     require(maxTokens >= 1, s"maxTokens must be >= 1, got $maxTokens")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol), posexplode(
         call_function("sentence_chunks", col(textCol), lit(maxTokens))))
       .select(col(idCol),
@@ -156,7 +155,6 @@ object Chunking {
                            window: Int, modulus: Int): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
     require(modulus >= 2, s"modulus must be >= 2, got $modulus")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(textCol).as("__t"))
     // cut positions: gram at window-start p (1-based) covers chars
     // [p, p+window-1] — the cut lands after its LAST char

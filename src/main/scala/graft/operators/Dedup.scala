@@ -114,11 +114,10 @@ object Dedup {
     * `removeEmpty` drops the "" token a whitespace-only doc produces
     * (the [[simhashTable]] contract).
     */
-  def hashedShingleSet(df: DataFrame, text: Column, n: Int,
+  def hashedShingleSet(text: Column, n: Int,
                        removeEmpty: Boolean = false,
                        mode: graft.functions.Tokenize.Mode =
                          graft.functions.Tokenize.Whitespace): Column = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // the tokenizer seam: Unicode mode segments CJK/Thai into real word
     // tokens before shingling (drops empties itself, so removeEmpty is
     // a no-op there); both modes agree on space-separated ASCII, which
@@ -141,11 +140,9 @@ object Dedup {
     * 32-bit halves so every intermediate fits a non-negative BIGINT).
     * [[md5TokenHashesDeclarative]] is the kernel's executable spec.
     */
-  def md5TokenHashes(df: DataFrame, text: Column): Column = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
+  def md5TokenHashes(text: Column): Column =
     call_function("md5_hashes64",
       array_remove(split(lower(trim(text)), "\\s+"), ""))
-  }
 
   /** Declarative form of [[md5TokenHashes]] — two conv'd 32-bit hex
     * halves per token, interpreted HOF lambdas (measured 2.6× slower at
@@ -269,7 +266,7 @@ object Dedup {
     // (longer prefixes only add candidates; shorter would break
     // exactness).
     val base = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-        hashedShingleSet(df, col(textCol), n, removeEmpty = n == 1).as("grams"))
+        hashedShingleSet(col(textCol), n, removeEmpty = n == 1).as("grams"))
       .withColumn("n", size(col("grams")))
       .filter(col("n") > 0)
       .persist()
@@ -377,7 +374,6 @@ object Dedup {
                            blockCol: String, k: Int, w: Int,
                            minShared: Int): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // Same cost-based strategy as [[containmentPairs]], and for the
     // same reason: on a small shared vocabulary the window minima
     // concentrate on the globally smallest hash values, so a
@@ -500,7 +496,7 @@ object Dedup {
     // ngram > 1 mines word-shingle Jaccard (sequence-sensitive) instead of
     // token-set Jaccard (bag-of-words); hashing is the fused native kernel
     val toks = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-      hashedShingleSet(df, col(textCol), ngram, removeEmpty = false, mode).as("toks"))
+      hashedShingleSet(col(textCol), ngram, removeEmpty = false, mode).as("toks"))
     // deliberate materialization point: the class table feeds three plan
     // branches (within-pairs + both sides of the class join); without
     // persist each branch re-runs the scan + groupBy
@@ -521,7 +517,6 @@ object Dedup {
     // would be the whole corpus in every executor. (For mostly-unique
     // corpora prefer [[minhashDupPairsClassed]] outright: all-pairs over
     // class reps is quadratic regardless of join strategy.)
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // size-ratio prefilter INSIDE the join condition (the similarity-
     // join length filter): J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so any
     // pair with min < t·max can never reach the threshold — pruned
@@ -744,7 +739,6 @@ object Dedup {
     // Tokens are hashed to longs once, then the native signature kernel
     // runs (statistically equivalent to slot-hashing the strings directly;
     // candidates differ but the exact-Jaccard verify fixes the output).
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // the fused signature+banding kernel (LshBandHashes): the two-step
     // minhash_signature → lshBands form re-evaluated the signature once
     // per band inside the interpreted transform lambda after projection
@@ -752,7 +746,7 @@ object Dedup {
     val withBand = df.select(
       col(idCol).as("id"), col(blockCol).as("blk"),
       explode(call_function("lsh_band_hashes",
-        hashedShingleSet(df, col(textCol), 1), lit(k), lit(b))).as("band"))
+        hashedShingleSet(col(textCol), 1), lit(k), lit(b))).as("band"))
       .select(col("id"), col("blk"),
         col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
     val candidates = withBand.as("a")
@@ -767,7 +761,7 @@ object Dedup {
     // and the candidate-side shuffle shrinks ~2×. xxhash64 collisions
     // within one pair's union are ~1e-16 — numerically exact.
     val toks = df.select(col(idCol).as("id"),
-      hashedShingleSet(df, col(textCol), 1).as("toks"))
+      hashedShingleSet(col(textCol), 1).as("toks"))
     candidates
       .join(toks.withColumnsRenamed(Map("id" -> "id_a", "toks" -> "ta")), "id_a")
       .join(toks.withColumnsRenamed(Map("id" -> "id_b", "toks" -> "tb")), "id_b")
@@ -800,7 +794,7 @@ object Dedup {
     // persist: this class table feeds five plan branches (within-pairs,
     // both band-join sides, and two verification joins)
     val classes = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-        hashedShingleSet(df, col(textCol), ngram).as("toks"))
+        hashedShingleSet(col(textCol), ngram).as("toks"))
       .groupBy(col("blk"), col("toks"))
       .agg(sort_array(collect_list(col("id"))).as("ids"))
       .withColumn("cls", xxhash64(col("blk"), col("toks")))
@@ -820,7 +814,6 @@ object Dedup {
     // minhash_signature into lshBands' interpreted transform lambda,
     // re-evaluating the signature once per band (104× here under
     // selective banding) with JIT-profile-dependent 8× bench swings
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val banded = classes
       .select(col("cls"), col("blk"),
         explode(call_function("lsh_band_hashes", col("toks"), lit(k), lit(b))).as("band"))
@@ -834,7 +827,6 @@ object Dedup {
       .select(col("a.cls").as("cls_a"), col("b.cls").as("cls_b"))
       .dropDuplicates("cls_a", "cls_b")
     val clsInfo = classes.select(col("cls"), col("toks"), col("ids"))
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val cross = candidates
       .join(clsInfo.withColumnsRenamed(Map("cls" -> "cls_a", "toks" -> "ta", "ids" -> "ids_a")), "cls_a")
       .join(clsInfo.withColumnsRenamed(Map("cls" -> "cls_b", "toks" -> "tb", "ids" -> "ids_b")), "cls_b")
@@ -897,12 +889,11 @@ object Dedup {
     */
   private def bandRows(df: DataFrame, idCol: String, textCol: String,
                        blockCol: String, k: Int, b: Int, ngram: Int): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // fused kernel — see [[minhashDupPairs]] for why the two-step form
     // re-evaluated the signature once per band
     df.select(col(idCol).as("id"), col(blockCol).as("blk"),
         explode(call_function("lsh_band_hashes",
-          hashedShingleSet(df, col(textCol), ngram), lit(k), lit(b))).as("band"))
+          hashedShingleSet(col(textCol), ngram), lit(k), lit(b))).as("band"))
       .select(col("id"), col("blk"),
         col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
   }
@@ -942,9 +933,9 @@ object Dedup {
       .select(col("x.id").as("corpus_id"), col("n.id").as("new_id"))
       .dropDuplicates("corpus_id", "new_id")
     val ctoks = corpus.select(col(idCol).as("corpus_id"),
-      hashedShingleSet(corpus, col(textCol), ngram).as("ta"))
+      hashedShingleSet(col(textCol), ngram).as("ta"))
     val ntoks = newDf.select(col(idCol).as("new_id"),
-      hashedShingleSet(newDf, col(textCol), ngram).as("tb"))
+      hashedShingleSet(col(textCol), ngram).as("tb"))
     // the shingle sets are sorted+distinct by construction, so the
     // native O(n+m) merge kernel computes the intersection (codegen)
     // and |union| = na + nb - inter — array_intersect/array_union
@@ -1059,7 +1050,6 @@ object Dedup {
                      minLen: Int): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // 16-byte BINARY md5 as the shuffle key: the full 128-bit identity
     // (collision-free at any corpus size, unlike a 64-bit hash at 10^14
     // grams) at half the bytes of the hex rendering; the oracle
@@ -1182,9 +1172,9 @@ object Dedup {
                          textCol: String, n: Int,
                          broadcastEval: Boolean = true): DataFrame = {
     val tGrams = train.select(col(idCol).as("id"),
-      explode(hashedShingleSet(train, col(textCol), n)).as("__g"))
+      explode(hashedShingleSet(col(textCol), n)).as("__g"))
     val eGrams0 = evalSet
-      .select(explode(hashedShingleSet(evalSet, col(textCol), n)).as("__g"))
+      .select(explode(hashedShingleSet(col(textCol), n)).as("__g"))
       .distinct()
     val eGrams = if (broadcastEval) broadcast(eGrams0) else eGrams0
     // per-doc grams are already distinct (hashedShingleSet contract), so
@@ -1209,7 +1199,6 @@ object Dedup {
     */
   def simhashTable(df: DataFrame, idCol: String, textCol: String,
                    portableHash: Boolean = false): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // zero-token docs are EXCLUDED, matching the original explode+agg
     // formulation (no tokens -> no group -> no row). Without the filter
     // the per-row kernel emits sh=0 for every empty/whitespace-only doc,
@@ -1220,8 +1209,8 @@ object Dedup {
     // portableHash picks md5-based token hashes ([[md5TokenHashes]]) so
     // the signature is reproducible outside Spark; the bit-fold kernel
     // is hash-agnostic (it folds whatever longs it is given)
-    val tokHashes = if (portableHash) md5TokenHashes(df, col(textCol))
-                    else hashedShingleSet(df, col(textCol), 1, removeEmpty = true)
+    val tokHashes = if (portableHash) md5TokenHashes(col(textCol))
+                    else hashedShingleSet(col(textCol), 1, removeEmpty = true)
     df.select(col(idCol).as("id"), tokHashes.as("__toks"))
       .filter(size(col("__toks")) > 0)
       .select(col("id"), call_function("simhash64", col("__toks")).as("sh"))
@@ -1277,8 +1266,8 @@ object Dedup {
     // class collapse: group ids by identical token set. Zero-token docs
     // (empty/whitespace text) are excluded — same contract as
     // [[simhashTable]]: they'd otherwise form one giant hamming-0 class.
-    val tokHashes = if (portableHash) md5TokenHashes(df, col(textCol))
-                    else hashedShingleSet(df, col(textCol), 1, removeEmpty = true)
+    val tokHashes = if (portableHash) md5TokenHashes(col(textCol))
+                    else hashedShingleSet(col(textCol), 1, removeEmpty = true)
     val classes = df.select(col(idCol).as("id"), tokHashes.as("toks"))
       .filter(size(col("toks")) > 0)
       .groupBy(col("toks"))
@@ -1295,7 +1284,6 @@ object Dedup {
     // simhash per class: native one-pass kernel over the pre-hashed
     // tokens — map-side, replacing an explode + 64-sum hash aggregate
     // (one shuffled row per (class, token)) with zero shuffle
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val clsSh = classes.select(col("cls"),
       call_function("simhash64", col("toks")).as("sh"))
     val sh = clsSh

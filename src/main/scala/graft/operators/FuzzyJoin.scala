@@ -32,9 +32,9 @@ object FuzzyJoin {
                         maxDist: Int): DataFrame = {
     require(maxDist == 1 || maxDist == 2,
       s"deletion-neighborhood blocking supports maxDist 1 or 2, got $maxDist")
-    // installs LevenshteinThresholdRule: the `dist <= maxDist` verify
-    // below optimizes to the banded O(len·k) DP with early exit
-    graft.expressions.GraftFunctions.register(df.sparkSession)
+    // LevenshteinThresholdRule (a GraftExtensions rule) optimizes the
+    // `dist <= maxDist` verify below to the banded O(len·k) DP with
+    // early exit
     val rows = df.select(col(idCol).as("__id"), col(strCol).as("__s"))
       .filter(col("__s").isNotNull)
 
@@ -113,7 +113,6 @@ object FuzzyJoin {
     val r = clean.select(col(cleanId).as("match_id"), col(cleanStr).as("__cs"))
       .filter(col("__cs").isNotNull)
       .withColumn("__k", blockKey(col("__cs")))
-    graft.expressions.GraftFunctions.register(dirty.sparkSession)
     val scored = l.join(r, "__k")
       .withColumn("score_ppm",
         floor(call_function("jaro_winkler", col("__ds"), col("__cs")) * lit(1e6))

@@ -381,8 +381,6 @@ object Graph {
     }
     val integralIds = isIntegral(edges.schema(srcCol).dataType) &&
       isIntegral(edges.schema(dstCol).dataType)
-    if (integralIds)
-      graft.expressions.GraftFunctions.register(edges.sparkSession)
     val und0 = edges
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
     val und = (if (integralIds)

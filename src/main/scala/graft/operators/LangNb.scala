@@ -99,10 +99,8 @@ object LangNb {
   /** Hashed char-n-gram bucket ids of a text column (the fused
     * [[graft.expressions.CharGramBuckets]] kernel; one pass, codegen'd).
     */
-  def gramBuckets(df: DataFrame, text: Column, n: Int, buckets: Int): Column = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
+  def gramBuckets(text: Column, n: Int, buckets: Int): Column =
     call_function("char_gram_buckets", normalized(text), lit(n), lit(buckets))
-  }
 
   /** Train on a labeled corpus: one aggregate per model table (gram
     * counts ≤ classes×buckets rows, class totals, doc priors), all
@@ -119,7 +117,7 @@ object LangNb {
     // OPTIMIZATION_r15.md) measured the probe+shuffle costing MORE than
     // the parallelism buys on this kernel (q248 1.18x slower with it)
     val grams = docs.select(col("lang"),
-      explode(gramBuckets(df, col("__t"), n, buckets)).as("b"))
+      explode(gramBuckets(col("__t"), n, buckets)).as("b"))
     // persisted: counts (≤ classes×buckets rows) feeds both the class
     // totals and the final log-likelihood join — without the cache the
     // corpus-sized gram pass above runs once per consumer
@@ -177,7 +175,7 @@ object LangNb {
     val score = udf((grams: Seq[Int]) =>
       bc.value.predict(if (grams == null) Nil else grams))
     df.withColumn("__pred",
-        score(gramBuckets(df, col(textCol), model.n, model.buckets)))
+        score(gramBuckets(col(textCol), model.n, model.buckets)))
       .withColumn("pred_lang", col("__pred._1"))
       .withColumn("score_q", col("__pred._2"))
       .drop("__pred")
@@ -192,7 +190,7 @@ object LangNb {
     val score = udf((grams: Seq[Int]) =>
       bc.value.predictWithMargin(if (grams == null) Nil else grams))
     df.withColumn("__pred",
-        score(gramBuckets(df, col(textCol), model.n, model.buckets)))
+        score(gramBuckets(col(textCol), model.n, model.buckets)))
       .withColumn("pred_lang", col("__pred._1"))
       .withColumn("score_q", col("__pred._2"))
       .withColumn("margin_q", col("__pred._3"))

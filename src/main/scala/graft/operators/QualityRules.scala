@@ -51,7 +51,6 @@ object QualityRules {
   def ruleTable(df: DataFrame, idCol: String, textCol: String,
                 stopwords: Seq[String] = gopherStopwords,
                 carryCols: Seq[String] = Nil): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val txt = coalesce(col(textCol).cast("string"), lit(""))
     val base = df.select(col(idCol) +: carryCols.map(col) :+ txt.as("__t"): _*)
       .withColumn("__w", filter(split(trim(col("__t")), "\\s+"),

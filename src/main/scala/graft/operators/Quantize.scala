@@ -52,7 +52,6 @@ object Quantize {
     * kernel ≡ declarative on random vectors.
     */
   def quantizeReport(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol), call_function("quantize_int8_stats", col(vecCol)).as("__q"))
       .select(col(idCol), col("__q.scale").as("scale"), col("__q.q_sum").as("q_sum"),
         col("__q.q_l1").as("q_l1"), col("__q.max_err").as("max_err"))
@@ -60,8 +59,8 @@ object Quantize {
 
   /** The declarative form of [[quantizeReport]] — higher-order Column
     * expressions only, kept as the kernel's executable specification
-    * (and the portable fallback for a session that can't register
-    * functions). The scale is staged as a projected column so it is
+    * (and the portable fallback for a session without graft's
+    * extensions). The scale is staged as a projected column so it is
     * computed once per row, not once per element inside each lambda.
     */
   def quantizeReportDeclarative(df: DataFrame, idCol: String, vecCol: String): DataFrame = {

@@ -209,7 +209,6 @@ object Retrieval {
                    lambda: Double, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lambda >= 0 && lambda <= 1, s"lambda must be in [0,1], got $lambda")
-    graft.expressions.GraftFunctions.register(cands.sparkSession)
     // both tables feed every greedy round — persist, or round i
     // re-derives the candidate pull and the N² cosine pass i times.
     // TRACKED: an untracked persist outlives its query, and the next

@@ -114,7 +114,6 @@ object Scoring {
     require(k >= 1, s"k must be positive, got $k")
     val cap = if (capacity > 0) capacity else 16 * k
     require(cap >= k, s"capacity $cap must be >= k=$k")
-    graft.expressions.GraftFunctions.register(items.sparkSession)
     val candidates = items
       .agg(call_function("misra_gries", col(itemCol), lit(cap)).as("__sk"))
       .select(explode(col("__sk")).as("__c"))

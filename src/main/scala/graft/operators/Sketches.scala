@@ -37,7 +37,6 @@ object Sketches {
     * output is persist-shaped: `shardCols…, sketch binary`.
     */
   def bitmapShards(df: DataFrame, shardCols: Seq[Column], keyCol: Column): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.groupBy(shardCols: _*)
       .agg(call_function("bitmap_build", keyCol).as("sketch"))
   }
@@ -71,7 +70,6 @@ object Sketches {
   def rollingDistinct(shards: DataFrame, dayCol: String,
                       windowDays: Int): DataFrame = {
     require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")
-    graft.expressions.GraftFunctions.register(shards.sparkSession)
     val d = shards.select(col(dayCol).as("day"), col("sketch").as("__sk"))
     val spine = d.select(col("day")).distinct()
     spine.join(d.select(col("day").as("__sd"), col("__sk")),
@@ -104,7 +102,6 @@ object Sketches {
                       periodDays: Int, maxOffset: Int): DataFrame = {
     require(periodDays >= 1, s"periodDays must be >= 1, got $periodDays")
     require(maxOffset >= 0, s"maxOffset must be >= 0, got $maxOffset")
-    graft.expressions.GraftFunctions.register(activity.sparkSession)
     val act = activity.select(col(periodCol).as("period"), col(keyCol).as("__k"))
       .where(col("__k").isNotNull).distinct()
     val cohorts = act.groupBy(col("__k")).agg(min(col("period")).as("cohort"))
@@ -132,7 +129,6 @@ object Sketches {
     */
   def ddsketchShards(df: DataFrame, shardCols: Seq[Column], valueCol: Column,
                      alpha: Double = 0.01): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.groupBy(shardCols: _*)
       .agg(call_function("ddsketch_build", valueCol, lit(alpha)).as("sketch"))
   }

@@ -248,7 +248,6 @@ object SkewJoins {
   def estimateJoinOutputRows(left: DataFrame, right: DataFrame,
                              keys: Seq[String],
                              width: Int = 4096, depth: Int = 4): Long = {
-    graft.expressions.GraftFunctions.register(left.sparkSession)
     def sk(df: DataFrame) =
       df.agg(call_function("cms_build", tagOf(keys), lit(width), lit(depth)).as("sk"))
     sk(left).select(col("sk").as("a"))

@@ -82,7 +82,6 @@ object Stats {
     */
   private def poissonReplicated(df: DataFrame, idCol: String,
                                 nReplicates: Int): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     // posexplode_OUTER: the kernel's array is non-null and non-empty
     // for every (non-null-id) row, so outer vs inner explode emit the
     // same rows — but the inner form lets InferFiltersFromGenerate
@@ -313,7 +312,7 @@ object Stats {
     graft.Caches.track(byBin)
     // global window over the ≤nBins-row bin table — the bounded-dim
     // convention (GroupOps.rowNumberId), never over corpus rows
-    val cum = Windows.boundedGlobal(byBin)(col("bin"))
+    val cum = Windows.boundedGlobal(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pre = byBin.select(col("bin"), col("n"), col("accuracy"),
       sum(col("n")).over(cum).as("cw"),

@@ -58,8 +58,9 @@ object TextEval {
   }
 
   /** The shared stats column: `array<struct<n, clipped, cand_total,
-    * ref_total>>` for n = 1..maxN, one kernel pass per pair row.
-    * Requires [[graft.expressions.GraftFunctions.register]].
+    * ref_total>>` for n = 1..maxN, one kernel pass per pair row
+    * (`ngram_overlap_stats`, a [[graft.expressions.GraftExtensions]]
+    * function).
     */
   private def overlapStats(candText: Column, refText: Column, maxN: Int,
                            mode: graft.functions.Tokenize.Mode =
@@ -80,7 +81,6 @@ object TextEval {
            mode: graft.functions.Tokenize.Mode =
              graft.functions.Tokenize.Whitespace): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"bleu maxN must be in [1,8], got $maxN")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val withStats = pairs.withColumn("__ov",
       overlapStats(col(candTextCol), col(refTextCol), maxN, mode))
     bleuFromStats(withStats, pairs.columns.toSeq, maxN)
@@ -101,7 +101,6 @@ object TextEval {
                 mode: graft.functions.Tokenize.Mode =
                   graft.functions.Tokenize.Whitespace): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"bleuMulti maxN must be in [1,8], got $maxN")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val withStats = pairs.withColumn("__ov",
       call_function("ngram_overlap_stats_multi",
         toks(col(candTextCol), mode),
@@ -157,7 +156,6 @@ object TextEval {
   def corpusBleu(docs: DataFrame, idCol: String, textCol: String,
                  partCol: String, maxN: Int = 4): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"corpusBleu maxN must be in [1,8], got $maxN")
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     val pairs = adjacentPairsKeep(docs, idCol, textCol, partCol)
     val withStats = pairs.withColumn("__ov",
       overlapStats(col("cand_text"), col("ref_text"), maxN))
@@ -216,7 +214,6 @@ object TextEval {
   def rougeL(pairs: DataFrame, candTextCol: String, refTextCol: String,
              beta: Double = 1.0): DataFrame = {
     require(beta > 0, s"rougeL beta must be positive, got $beta")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val withLcs = pairs
       .withColumn("__ct", toks(col(candTextCol)))
       .withColumn("__rt", toks(col(refTextCol)))
@@ -245,7 +242,6 @@ object TextEval {
     * that is standard).
     */
   def wer(pairs: DataFrame, hypTextCol: String, refTextCol: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val withEd = pairs
       .withColumn("__ht", toks(col(hypTextCol)))
       .withColumn("__rt", toks(col(refTextCol)))
@@ -276,7 +272,6 @@ object TextEval {
   def werMulti(pairs: DataFrame, hypTextCol: String, refsTextCol: String,
                mode: graft.functions.Tokenize.Mode =
                  graft.functions.Tokenize.Whitespace): DataFrame = {
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val staged = pairs
       .withColumn("__ht", toks(col(hypTextCol), mode))
       .withColumn("__ws", transform(col(refsTextCol), (r, i) => {
@@ -314,7 +309,6 @@ object TextEval {
            maxN: Int = 6, beta: Double = 2.0): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"chrF maxN must be in [1,8], got $maxN")
     require(beta > 0, s"chrF beta must be positive, got $beta")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     def chars(c: Column): Column =
       filter(split(regexp_replace(lower(trim(c)), "\\s+", ""), ""), t => t =!= lit(""))
     val withStats = pairs.withColumn("__ov",
@@ -387,7 +381,6 @@ object TextEval {
   def rougeN(pairs: DataFrame, candTextCol: String, refTextCol: String,
              ns: Seq[Int] = Seq(1, 2)): DataFrame = {
     require(ns.nonEmpty && ns.forall(n => n >= 1 && n <= 8), s"rougeN orders must be in [1,8], got $ns")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val maxN = ns.max
     val withStats = pairs.withColumn("__ov",
       overlapStats(col(candTextCol), col(refTextCol), maxN))
@@ -428,7 +421,6 @@ object TextEval {
                     graft.functions.Tokenize.Whitespace): DataFrame = {
     require(ns.nonEmpty && ns.forall(n => n >= 1 && n <= 8),
       s"rougeNMulti orders must be in [1,8], got $ns")
-    graft.expressions.GraftFunctions.register(pairs.sparkSession)
     val maxN = ns.max
     val staged = pairs
       .withColumn("__ct", toks(col(candTextCol), mode))

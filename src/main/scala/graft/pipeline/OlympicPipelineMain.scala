@@ -53,9 +53,7 @@ object OlympicPipelineMain {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: OlympicPipelineMain <bronzeDir> <outDir>")
     val Array(bronzeDir, outDir) = args
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
-      appName = "olympic-pipeline")
+    val spark = GraftSession.local(appName = "olympic-pipeline")
     val bronze = Map(
       "biodata" -> Tables.table(spark, bronzeDir, "biodata"),
       "results" -> Tables.table(spark, bronzeDir, "results"),

@@ -54,9 +54,9 @@ object CosineTopKJoin {
     AttributeReference("cosine_sim", DoubleType, nullable = false)())
 }
 
-/** Planner strategy: installed via `spark.experimental.extraStrategies`
-  * (see [[GraftStrategies.install]]) or a SparkSessionExtensions
-  * injectPlannerStrategy.
+/** Planner strategy: installed by [[graft.expressions.GraftExtensions]]
+  * (every [[graft.GraftSession.local]] session) or
+  * [[graft.expressions.GraftFunctions.register]].
   */
 object CosineTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -64,14 +64,6 @@ object CosineTopKStrategy extends SparkStrategy {
       CosineTopKExec(planLater(q), planLater(c), k, out) :: Nil
     case _ => Nil
   }
-}
-
-object GraftStrategies {
-  /** Idempotent registration of graft's planner strategies. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(CosineTopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ CosineTopKStrategy
 }
 
 /** Physical operator: collect+broadcast the (bounded) query batch, scan

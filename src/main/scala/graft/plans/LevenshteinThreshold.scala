@@ -29,8 +29,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * table per candidate pair and a thin k-band — the candidate
   * generation ([[graft.operators.FuzzyJoin]]) bounds HOW MANY pairs,
   * this bounds the cost of EACH. Installed by
-  * [[graft.expressions.GraftFunctions.register]] (imperative) and
-  * [[graft.expressions.GraftExtensions]] (`spark.sql.extensions`).
+  * [[graft.expressions.GraftExtensions]] on every
+  * [[graft.GraftSession.local]] session (or by
+  * [[graft.expressions.GraftFunctions.register]] on a foreign one).
   */
 object LevenshteinThresholdRule extends Rule[LogicalPlan] {
 

@@ -117,7 +117,6 @@ private[graft] object EventsStreamingQueries extends QueryRegistry {
     * Exact, so the oracle is the plain DISTINCT-users intersection.
     */
   private def q127Retention(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val ev = Tables.withEventTime(t(s, dir, "events"))
     val cut = lit("2024-01-15").cast("timestamp")
     ev.groupBy(col("event_type"))

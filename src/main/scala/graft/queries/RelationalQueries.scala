@@ -883,7 +883,7 @@ private[graft] object RelationalQueries extends QueryRegistry {
     val byRegion = org.apache.spark.sql.expressions.Window.partitionBy(col("r_name"))
     // bounded dim (region×nation) — the constant-key whole frame keeps
     // WindowExec's partitionSpec non-empty (no per-task warning)
-    val overall = graft.operators.Windows.boundedGlobalWhole(rev)
+    val overall = graft.operators.Windows.boundedGlobalWhole
     rev
       .withColumn("region_share", round(col("rev") / sum(col("rev")).over(byRegion), 6))
       .withColumn("total_share", round(col("rev") / sum(col("rev")).over(overall), 6))
@@ -933,7 +933,6 @@ private[graft] object RelationalQueries extends QueryRegistry {
     * deterministic grid makes the estimates exactly SQL-replayable.
     */
   private def q137JoinCardinality(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val li = t(s, dir, "lineitem")
     val ord = t(s, dir, "orders")
     def sk(df: DataFrame, key: String) =
@@ -967,7 +966,7 @@ private[graft] object RelationalQueries extends QueryRegistry {
       .select((col("l_orderkey") % 256).cast("long").as("x"),
         (col("l_partkey") % 256).cast("long").as("y"))
     base.withColumn("h",
-        graft.operators.Layout.hilbertValue2(base, col("x"), col("y"), 8))
+        graft.operators.Layout.hilbertValue2(col("x"), col("y"), 8))
       .orderBy(col("h"), col("x"), col("y"))
   }
 

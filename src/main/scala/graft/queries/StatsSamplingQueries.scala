@@ -373,7 +373,6 @@ private[graft] object StatsSamplingQueries extends QueryRegistry {
     * with an exact-match oracle.
     */
   private def q131KmvRetention(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val ev = Tables.withEventTime(t(s, dir, "events"))
       .filter(col("user_id").isNotNull)
     val cut = lit("2024-01-15").cast("timestamp")
@@ -403,7 +402,6 @@ private[graft] object StatsSamplingQueries extends QueryRegistry {
     * min-over-rows estimate exactly.
     */
   private def q133CmsFreq(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val toks = t(s, dir, "documents")
       .select(explode(
         filter(split(lower(trim(col("text"))), " "), t => t =!= lit("")))
@@ -442,7 +440,6 @@ private[graft] object StatsSamplingQueries extends QueryRegistry {
     * in SQL.
     */
   private def q138GroupSample(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     t(s, dir, "events").filter(col("user_id").isNotNull)
       .groupBy(col("event_type"))
       .agg(call_function("sample_bottomk", col("user_id"), lit(5)).as("sample"))

@@ -25,7 +25,6 @@ private[graft] object TextMultimodalQueries extends QueryRegistry {
     */
   private def q29TextStats(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions._
-    graft.expressions.GraftFunctions.register(s)
     val stop = Seq("the", "a", "and", "of", "to")
     t(s, dir, "documents")
       .select(col("doc_id"), tokenStatsNative(col("text"), stop).as("st"))
@@ -120,7 +119,6 @@ private[graft] object TextMultimodalQueries extends QueryRegistry {
     * n_composed counts compositions (char-length delta).
     */
   private def q55NormalizeNfc(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val injected = t(s, dir, "documents").select(col("doc_id"),
       concat(col("text"),
         lit(" cafe\u0301 u\u0308ni A\u030A end")).as("injected"))
@@ -740,7 +738,6 @@ private[graft] object TextMultimodalQueries extends QueryRegistry {
     */
   private def q209UnicodeTokens(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Tokenize
-    graft.expressions.GraftFunctions.register(s)
     t(s, dir, "documents")
       .withColumn("__u", Tokenize.tokens(col("text"), Tokenize.Unicode))
       .select(col("doc_id"),
@@ -855,7 +852,6 @@ private[graft] object TextMultimodalQueries extends QueryRegistry {
     * spec-pinned on hand-segmented fixtures (incl. CJK 。).
     */
   private def q217SentenceChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     t(s, dir, "documents")
       .filter(col("text").isNotNull && col("text") =!= "")
       .withColumn("__c", call_function("sentence_chunks", col("text"), lit(64)))

@@ -258,7 +258,6 @@ object EventStreams {
   def windowedHeavyHitters(events: DataFrame, itemCol: String,
                            window_ : String = "1 hour", capacity: Int = 8,
                            delay: String = "10 minutes"): DataFrame = {
-    graft.expressions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("event_time", delay)
       .groupBy(window(col("event_time"), window_))
@@ -281,7 +280,6 @@ object EventStreams {
   def windowedDistinct(events: DataFrame, keyCol: String,
                        window_ : String = "1 hour",
                        delay: String = "10 minutes"): DataFrame = {
-    graft.expressions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("event_time", delay)
       .groupBy(window(col("event_time"), window_))
@@ -306,7 +304,6 @@ object EventStreams {
                              window_ : String = "1 hour",
                              delay: String = "10 minutes",
                              k: Int = 1024): DataFrame = {
-    graft.expressions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("event_time", delay)
       .groupBy(window(col("event_time"), window_))
@@ -327,7 +324,6 @@ object EventStreams {
                         window_ : String = "1 hour",
                         delay: String = "10 minutes",
                         alpha: Double = 0.01): DataFrame = {
-    graft.expressions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("event_time", delay)
       .groupBy(window(col("event_time"), window_))

@@ -12,8 +12,7 @@ import graft.GraftSession
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, appName = "stream-demo")
+    val spark = GraftSession.local(appName = "stream-demo")
 
     // file streams watch directories; testdata ships single files
     val dir = Files.createTempDirectory("stream_demo")

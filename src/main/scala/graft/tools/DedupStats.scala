@@ -63,15 +63,7 @@ object DedupStats {
     val selectiveBudget = args.find(_.startsWith("selective="))
       .map(_.stripPrefix("selective=").toInt)
     val simhashMode = args.contains("simhash")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(appName = "graft-dedup-stats")
     try {
       if (simhashMode) runSimhash(spark, dir, threshold.toInt.max(1))
       else run(spark, dir, threshold, wantExact, ngram, selectiveBudget, noVerify)
@@ -82,7 +74,6 @@ object DedupStats {
     * segment-bucket join + Hamming verify + id expansion). */
   def runSimhash(spark: SparkSession, dir: String, maxDistance: Int): Unit = {
     import graft.operators.Dedup
-    graft.expressions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val nDocs = docs.count()
     val t0 = System.nanoTime()
@@ -102,7 +93,6 @@ object DedupStats {
           selectiveBudget: Option[Int] = None,
           noVerify: Boolean = false): Unit = {
     import graft.operators.Dedup
-    graft.expressions.GraftFunctions.register(spark)
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val nDocs = docs.count()
@@ -128,7 +118,7 @@ object DedupStats {
     val withBand = reps.select(
       col("cls"), col("lang").as("blk"),
       call_function("minhash_signature",
-        Dedup.hashedShingleSet(reps, col("text"), ngram), lit(k)).as("sig"))
+        Dedup.hashedShingleSet(col("text"), ngram), lit(k)).as("sig"))
       .withColumn("band", explode(Dedup.lshBands(col("sig"), b, r)))
       .select(col("cls"), col("blk"),
         col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
@@ -146,7 +136,7 @@ object DedupStats {
 
     val tVerify = System.nanoTime()
     val toks = reps.select(col("cls"),
-      Dedup.hashedShingleSet(reps, col("text"), ngram).as("toks"))
+      Dedup.hashedShingleSet(col("text"), ngram).as("toks"))
     val verifiedPairs =
       if (noVerify) -1L
       else candidates

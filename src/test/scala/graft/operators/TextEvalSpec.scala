@@ -381,9 +381,9 @@ class TextEvalSpec extends SparkSpec {
     assert(out.getAs[Long]("h_len") == 2L)
   }
 
-  test("standalone session path: bleu() self-registers the kernel function") {
-    // regression: call_function("ngram_overlap_stats") must not depend
-    // on an earlier query having registered GraftFunctions
+  test("bleu() on a factory-derived session needs no registration") {
+    // call_function("ngram_overlap_stats") resolves on any session the
+    // factory's extensions reach, not only the one an earlier query ran on
     val fresh = spark.newSession()
     import fresh.implicits._
     val df = Seq(("a b", "a b")).toDF("cand_text", "ref_text")

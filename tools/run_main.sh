@@ -2,20 +2,17 @@
 # Run a graft main directly against the sbt-compiled classes, bypassing
 # sbt (useful when sbt's lock is held by a concurrent test run).
 # Usage: tools/run_main.sh <mainClass> [args...]
-# Env passthrough: SPARK_GRAFT_* vars are read by the mains themselves.
+# Env passthrough: SPARK_GRAFT_* vars are read by the mains themselves
+# (SPARK_GRAFT_CPUS defaults to every core); SPARK_DRIVER_MEM sets the
+# heap, 8g by default as in build.sbt.
 set -euo pipefail
 CLS="$1"; shift
-# Bench/Verify default to local[4] when SPARK_GRAFT_CPUS is unset — the
-# driver always exports 32. Match it, or every timing silently runs on
-# an eighth of the machine (cost a whole false-regression investigation).
-: "${SPARK_GRAFT_CPUS:=32}"
-export SPARK_GRAFT_CPUS
 # 128+ queries x whole-stage codegen generate enough JIT'd classes to
 # exhaust the default 240 MB reserved code cache mid-run, after which
 # HotSpot silently stops compiling and everything runs interpreted —
 # the bench's erratic 5-30x per-query tail. Reserve enough for the
 # whole suite.
-exec java -Xmx96g -XX:ReservedCodeCacheSize=1g \
+exec java -Xmx"${SPARK_DRIVER_MEM:-8g}" -XX:ReservedCodeCacheSize=1g \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
